@@ -342,6 +342,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from xml_to_parquet_spark import get_spark
 from xml_to_parquet_spark.registry import load_all
 
+# The vendored reference fixture pair every conversion entry reads.
+_FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "tests", "fixtures")
+REF_XML = os.path.join(_FIXTURES, "PurchaseOrder.xml")
+REF_XSD = os.path.join(_FIXTURES, "PurchaseOrder.xsd")
+
 # Representative slice of SURVEY.md §2.2 — one per operator class:
 # scan-agg (q1, q6), join-agg-topk (q3), star join (q5), big-IN + triple
 # join (q18), window, top-k, exact + LSH dedup, iterative components,
@@ -568,19 +573,17 @@ def _bench_conversion(spark, n_files: int = 200) -> float:
 
     from xml_to_parquet_spark.sources.xml_source import convert_to_dataset
 
-    ref_xml = "/root/reference/test/PurchaseOrder.xml"
-    ref_xsd = "/root/reference/test/PurchaseOrder.xsd"
     src_dir = f"/tmp/xml_to_parquet_spark_bench_conv/{n_files}"
     if not os.path.isdir(src_dir) or len(os.listdir(src_dir)) != n_files:
         shutil.rmtree(src_dir, ignore_errors=True)
         os.makedirs(src_dir, exist_ok=True)
-        body = open(ref_xml).read()
+        body = open(REF_XML).read()
         for i in range(n_files):
             with open(f"{src_dir}/po_{i:04d}.xml", "w") as fh:
                 fh.write(body)
     out = f"{src_dir}_out"
     t0 = time.perf_counter()
-    convert_to_dataset(spark, f"{src_dir}/*.xml", ref_xsd, out)
+    convert_to_dataset(spark, f"{src_dir}/*.xml", REF_XSD, out)
     dt = time.perf_counter() - t0
     n_rows = spark.read.parquet(out).count()
     assert n_rows == n_files, f"conversion produced {n_rows} rows, want {n_files}"
@@ -593,12 +596,10 @@ def _bench_large_xml(spark, n_items: int = 40000) -> float:
     O(document)-memory streaming-parse claim (reference README.md:14) with
     a real number: Spark's XML reader is StAX-streaming per record, so this
     costs seconds, not an OOM."""
-    ref_xml = "/root/reference/test/PurchaseOrder.xml"
-    ref_xsd = "/root/reference/test/PurchaseOrder.xsd"
     src = f"/tmp/xml_to_parquet_spark_bench_conv/big_{n_items}.xml"
     if not os.path.isfile(src):
         os.makedirs(os.path.dirname(src), exist_ok=True)
-        head, _ = open(ref_xml).read().split("<items>")
+        head, _ = open(REF_XML).read().split("<items>")
         item = (
             '<item partNum="%05d-AB"><productName>Widget %d</productName>'
             "<quantity>%d</quantity><USPrice>%d.99</USPrice>"
@@ -616,7 +617,7 @@ def _bench_large_xml(spark, n_items: int = 40000) -> float:
     from xml_to_parquet_spark.sources.xml_source import read_xml_documents
 
     t0 = time.perf_counter()
-    df = read_xml_documents(spark, src, ref_xsd)
+    df = read_xml_documents(spark, src, REF_XSD)
     n = df.select(F.size("purchaseOrder.items.item").alias("n")).collect()[0]["n"]
     dt = time.perf_counter() - t0
     assert n == n_items, f"large-doc conversion saw {n} items, want {n_items}"
@@ -633,12 +634,10 @@ def _bench_archive_conversion(spark, n_members: int = 10000) -> float:
 
     from xml_to_parquet_spark.sources.xml_source import convert_archives_to_dataset
 
-    ref_xml = "/root/reference/test/PurchaseOrder.xml"
-    ref_xsd = "/root/reference/test/PurchaseOrder.xsd"
     src = f"/tmp/xml_to_parquet_spark_bench_conv/members_{n_members}.tar.gz"
     if not os.path.isfile(src):
         os.makedirs(os.path.dirname(src), exist_ok=True)
-        body = open(ref_xml, "rb").read()
+        body = open(REF_XML, "rb").read()
         import io as _io
 
         with tarfile.open(src, "w:gz") as tf:
@@ -650,7 +649,7 @@ def _bench_archive_conversion(spark, n_members: int = 10000) -> float:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     t0 = time.perf_counter()
     convert_archives_to_dataset(
-        spark, src, ref_xsd, "tar", out, parse_parallelism=cpus
+        spark, src, REF_XSD, "tar", out, parse_parallelism=cpus
     )
     dt = time.perf_counter() - t0
     n_rows = spark.read.parquet(out).count()

@@ -19,5 +19,9 @@ def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-REF_XML = "/root/reference/test/PurchaseOrder.xml"
-REF_XSD = "/root/reference/test/PurchaseOrder.xsd"
+# The reference fixture pair: the purchase-order example of the W3C XML
+# Schema Primer (FIXTURES.md §F1), vendored so the suite needs nothing
+# outside the repo.
+FIXTURES_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
+REF_XML = os.path.join(FIXTURES_DIR, "PurchaseOrder.xml")
+REF_XSD = os.path.join(FIXTURES_DIR, "PurchaseOrder.xsd")

@@ -10,10 +10,8 @@ import io
 import shutil
 import tarfile
 
+from tests.conftest import REF_XML, REF_XSD
 from xml_to_parquet_spark.cli import _detect_archive_format, build_parser, main
-
-REF_XML = "/root/reference/test/PurchaseOrder.xml"
-REF_XSD = "/root/reference/test/PurchaseOrder.xsd"
 
 
 def _make_tar(path, n=5):

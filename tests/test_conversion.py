@@ -1,8 +1,9 @@
 """Golden parity tests for the XML→Parquet conversion surface.
 
-Golden rows are the reference's documented outputs
-(/root/reference/README.md:120, :168, :178) — the de-facto golden files per
-SURVEY.md §5.
+Golden rows are the reference's documented outputs (its README.md:120,
+:168, :178) — the de-facto golden files per SURVEY.md §5. The input pair
+is the vendored W3C Primer purchase order in ``tests/fixtures/``
+(FIXTURES.md §F1).
 """
 
 import gzip
@@ -178,6 +179,9 @@ def test_union_xsd_rejected(spark, tmp_path):
     p2.write_text(bare)
     with pytest.raises(UnsupportedXsdType):
         load_xsd_struct(spark, str(p2))
+    # a missing path is reported as such, not parsed as XSD text
+    with pytest.raises(FileNotFoundError, match="no_such.xsd"):
+        load_xsd_struct(spark, str(tmp_path / "no_such.xsd"))
 
 
 def test_output_naming():

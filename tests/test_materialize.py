@@ -17,7 +17,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from xml_to_parquet_spark.materialize import materialize
+from xml_to_parquet_spark.materialize import materialize, record_barriers
 
 
 def _set_checkpoint_dir(spark, path):
@@ -47,6 +47,18 @@ def test_default_mode_is_local_checkpoint(spark):
     assert df.count() == 10
     # lineage is cut: the plan is a bare scan of the materialized RDD
     assert "ExistingRDD" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_record_barriers_sees_the_plan_behind_the_barrier(spark):
+    """The served plan of a materialized frame is a bare RDD scan; the
+    recorder keeps the input plan the barrier replaced, and only while
+    it is open."""
+    with record_barriers() as plans:
+        df = materialize(spark.range(10).groupBy((F.col("id") % 3).alias("k")).count())
+    materialize(spark.range(5))  # recorder closed: not recorded
+    assert "HashAggregate" not in df._jdf.queryExecution().executedPlan().toString()
+    assert len(plans) == 1
+    assert "HashAggregate" in plans[0].executedPlan().toString()
 
 
 def test_reliable_mode_writes_to_configured_dir(spark, reliable_dir):

@@ -32,9 +32,12 @@ justification in ``_UNPARTITIONED_WINDOW_ALLOWLIST`` — a new operator
 that adds one without a bound argument fails here instead of on a
 cluster.
 
-Limitation, stated honestly: iterative operators that localCheckpoint
-internally surface only their POST-checkpoint plan — their inner-round
-plans are covered by the per-op pins, not this sweep. The sweep is one
+Barriers: operators that cut lineage through ``materialize()`` serve
+only their POST-barrier plan, but the subtree behind each barrier still
+executes. The registry smell sweep therefore builds every operator
+inside ``materialize.record_barriers()`` and checks the served plan plus
+every recorded ``materialize()`` input plan; the unpartitioned-window
+sweep still inspects served plans only. The sweep is one
 test (not a 300-way parametrize) so a full run costs one pass over the
 registry at the smallest SF; it asserts an empty violation list and
 prints every offender on failure.
@@ -50,6 +53,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from xml_to_parquet_spark.materialize import record_barriers
 from xml_to_parquet_spark.registry import STAGED, load_all
 
 SF_DIR = os.environ.get("XTPS_SMELL_SF", "/root/testdata/sf0.001")
@@ -111,7 +115,7 @@ _UNPARTITIONED_WINDOW_ALLOWLIST: dict[str, str] = {
 # bit_or longs, SortAggregate → HashAggregate, ~20%) shows these are
 # sometimes fixable, so every occurrence needs a reviewed reason:
 # either the rewrite was measured-and-rejected or the input is bounded.
-# All four current entries are the struct-ORDERING-KEY min_by/max_by
+# The struct-keyed entries are the struct-ORDERING-KEY min_by/max_by
 # argmin device — the struct key itself forces the sort (measured r16:
 # carrying only a scalar value keeps BOTH SortAggregates and adds a
 # join; A/B in sim_kmeans_update's docstring) — and all stay map-side
@@ -136,6 +140,15 @@ _SORT_AGGREGATE_ALLOWLIST: dict[str, str] = {
     " sort-hostile fan-outs at the word-packed bit_or variant",
     "agg_theta_setops": "theta-sketch binary buffer; KB-sized mergeable"
     " state is the whole point (map-side combinable)",
+    # the entries below sit behind materialize() barriers (seen through
+    # record_barriers)
+    "graph_label_propagation": "per-round struct-keyed argmax (min_by over"
+    " (-cnt, lbl)) in each LPA round; one row per node, state never"
+    " node x node",
+    "graph_modularity": "scores graph_label_propagation's clustering; same"
+    " per-round struct-keyed min_by, one row per node",
+    "pareto_frontier": "per-price argmax max(struct(size, n_parts)) (step"
+    " 2); at most one row per distinct price",
 }
 
 
@@ -195,6 +208,8 @@ _DATA_SIZED_BROADCAST_ALLOWLIST: dict[str, str] = {
     "sim_silhouette": "centroid slice: vec_id < N_CENTROIDS, fixed",
     "sim_topk_cosine": "query set: vec_id < N_QUERIES (8 rows at any SF)",
     "sim_two_stage_rerank": "query set: vec_id < N_QUERIES, fixed",
+    "sim_diversity_mmr": "query set: vec_id < N_QUERIES, fixed (the"
+    " candidate pool behind its materialize() barrier)",
 }
 
 _LOGICAL_REDUCERS = {"Aggregate", "GlobalLimit", "LocalLimit"}
@@ -433,10 +448,17 @@ def test_no_plan_smells_across_entire_registry(spark):
     widths = _base_table_widths(spark)
     for name, qd in sorted(queries.items()):
         try:
-            df = qd.fn(spark, SF_DIR)
-            jqe = df._jdf.queryExecution()
-            plan = jqe.executedPlan().toString()
-            wide_scans = _wide_full_width_scans(jqe.sparkPlan(), widths)
+            # the served plan plus every materialize() input plan: smells
+            # behind a barrier still execute, the served plan only shows
+            # the checkpoint scan that replaced them
+            with record_barriers() as jqes:
+                df = qd.fn(spark, SF_DIR)
+            jqes = [df._jdf.queryExecution(), *jqes]
+            plan = "\n".join(j.executedPlan().toString() for j in jqes)
+            wide_scans = [
+                h for j in jqes for h in _wide_full_width_scans(j.sparkPlan(), widths)
+            ]
+            fat_broadcasts = [h for j in jqes for h in _data_sized_broadcasts(j)]
         except Exception as e:  # noqa: BLE001 — report, don't abort the sweep
             violations.append(f"{name}: plan build failed: {e!r:.200}")
             continue
@@ -449,7 +471,6 @@ def test_no_plan_smells_across_entire_registry(spark):
                     "needed columns or add a reviewed reason to "
                     "_FULL_WIDTH_SCAN_ALLOWLIST"
                 )
-        fat_broadcasts = _data_sized_broadcasts(jqe)
         if fat_broadcasts:
             seen_fat_broadcast.add(name)
             if name not in _DATA_SIZED_BROADCAST_ALLOWLIST:

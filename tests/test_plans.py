@@ -384,13 +384,18 @@ def test_dedup_substring_bucket_shape_no_joins(spark, sf_dir):
 
 
 def test_q2_broadcast_dims_and_stable_topk(spark, sf_dir):
-    """r7: all four dims broadcast into the partsupp probe; the correlated
+    """supplier/nation/region broadcast-hash-join into the derived
+    partsupp probe, and the 1-row supplier count reaches the derivation
+    as a broadcast cross join (BroadcastNestedLoopJoin) — there is no
+    ps<->p join at all (q2_min_cost_supplier docstring). The correlated
     min resolves as one window over p_partkey and the LIMIT is a
     TakeOrderedAndProject with a unique ordering chain — never a global
     sort exchange feeding a bare limit."""
     df = load_all()["q2_min_cost_supplier"].fn(spark, sf_dir)
     n = node_counts(df)
-    assert n.get("BroadcastHashJoin", 0) >= 4, n
+    assert n.get("BroadcastHashJoin", 0) == 3, n
+    assert n.get("BroadcastNestedLoopJoin", 0) == 1, n
+    assert not n.get("CartesianProduct"), n
     assert not any("SortMergeJoin" in k for k in n), n
     assert n.get("TakeOrderedAndProject", 0) == 1, n
     assert n.get("Window", 0) == 1, n

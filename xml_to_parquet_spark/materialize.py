@@ -27,11 +27,37 @@ that enumerates the registry (gen_plans_doc.py, the audit scripts) pays
 that job once per call site — acceptable for sf0.001-scale audits, and
 the price of the consumers seeing ``ExistingRDD``/checkpoint scans
 instead of re-running the lineage.
+
+Plan tooling that must see BEHIND the barriers opens ``record_barriers()``
+around an operator's build: while it is open, every ``materialize()``
+call appends its input's JVM ``QueryExecution`` to the yielded list. The
+registry smell sweep (``tests/test_plan_smells.py``) checks the served
+plan plus every recorded barrier plan, so it covers every
+``materialize()`` input plan, not only the post-barrier remainder.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from typing import Iterator
+
 from pyspark.sql import DataFrame
+
+_recorders: list[list] = []
+
+
+@contextmanager
+def record_barriers() -> Iterator[list]:
+    """Collect the JVM ``QueryExecution`` of every ``materialize()`` input
+    built inside the ``with`` block, in call order (nested recorders each
+    see every barrier)."""
+    plans: list = []
+    _recorders.append(plans)
+    try:
+        yield plans
+    finally:
+        # by identity: two recorders holding equal plan lists are distinct
+        _recorders[:] = [r for r in _recorders if r is not plans]
 
 
 def _reliable_dir_configured(df: DataFrame) -> bool:
@@ -54,6 +80,8 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     final plan without running jobs at build time (e.g. the last loop
     round of an iterative operator whose plan a test inspects).
     """
+    for plans in _recorders:
+        plans.append(df._jdf.queryExecution())
     if _reliable_dir_configured(df):
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)

@@ -52,10 +52,16 @@ def _check_no_union(xsd_text: str) -> None:
 
 def load_xsd_struct(spark: SparkSession, xsd: str) -> T.StructType:
     """Compile XSD text (or a path to an .xsd file) to the raw Spark schema
-    of all global elements, in XSD document order."""
+    of all global elements, in XSD document order.
+
+    An argument that is neither an existing file nor XSD text (markup
+    starting with ``<``) raises ``FileNotFoundError`` naming the path,
+    instead of reaching the XSD parser as malformed schema text."""
     if os.path.exists(xsd):
         with open(xsd) as fh:
             xsd = fh.read()
+    elif not xsd.lstrip().startswith("<"):
+        raise FileNotFoundError(f"XSD file not found: {xsd}")
     _check_no_union(xsd)
     jschema = spark._jvm.org.apache.spark.sql.execution.datasources.xml.XSDToSchema.read(xsd)
     return T.StructType.fromJson(_json_loads(jschema.json()))
