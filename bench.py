@@ -628,8 +628,7 @@ def _bench_archive_conversion(spark, n_members: int = 10000) -> float:
     """Distributed archive expansion (VERDICT r2 #7): one tar.gz with
     n_members XML documents converted to a parquet dataset in ONE job —
     binaryFile scan → executor-side member extraction (mapInPandas) →
-    from_xml → parquet, zero driver round-trips (contrast with ``convert``'s
-    reference-compat per-member naming loop)."""
+    from_xml → parquet, zero driver round-trips."""
     import tarfile
 
     from xml_to_parquet_spark.sources.xml_source import convert_archives_to_dataset

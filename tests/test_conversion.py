@@ -8,9 +8,11 @@ is the vendored W3C Primer purchase order in ``tests/fixtures/``
 
 import gzip
 import json
+import logging
 import os
 import shutil
 import tarfile
+import uuid
 import zipfile
 
 import pytest
@@ -447,3 +449,173 @@ def test_convert_and_dataset_paths_agree(spark, tmp_path):
     a = sorted(r[0] for r in per_file.select(F.to_json(F.struct("*"))).collect())
     b = sorted(r[0] for r in dataset.select(F.to_json(F.struct("*"))).collect())
     assert a == b
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted by the status tracker under a job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _truncated_gz(path):
+    with open(REF_XML, "rb") as fin:
+        path.write_bytes(gzip.compress(fin.read())[:200])
+
+
+def test_dataset_path_drops_malformed_inputs(spark, tmp_path):
+    """A truncated or non-XML input becomes no dataset row, as ``convert``
+    skips it (convert_xml_to_parquet.py:231-236), not an all-null row."""
+    from xml_to_parquet_spark.sources.xml_source import convert_to_dataset
+
+    src = tmp_path / "in"
+    src.mkdir()
+    for i in range(2):
+        shutil.copy(REF_XML, src / f"{i}.xml")
+    body = open(REF_XML).read()
+    (src / "truncated.xml").write_text(body[: len(body) // 2])
+    _truncated_gz(src / "truncated.xml.gz")
+    (src / "notes.txt").write_text("not xml at all\n")
+    convert_to_dataset(spark, str(src / "*"), REF_XSD, str(tmp_path / "ds"))
+    rows = spark.read.parquet(str(tmp_path / "ds")).collect()
+    assert sorted(r["_src"] for r in rows) == ["0.xml", "1.xml"]
+    assert all(r["purchaseOrder"] is not None for r in rows)
+
+
+def test_corrupt_input_is_isolated(spark, tmp_path, caplog):
+    """A truncated .xml.gz beside a good .xml in one call: the good file is
+    written, the bad one logged and skipped (and not deleted), and no
+    staging directory is left behind."""
+    src = tmp_path / "in"
+    out = tmp_path / "out"
+    src.mkdir()
+    out.mkdir()
+    shutil.copy(REF_XML, src / "good.xml")
+    _truncated_gz(src / "bad.xml.gz")
+    with caplog.at_level(logging.ERROR):
+        written = convert(spark, str(src / "*"), REF_XSD, target_path=str(out), delete_xml=True)
+    assert written == [str(out / "good.xml.parquet")]
+    assert written.skipped == [str(src / "bad.xml.gz")]
+    assert "bad.xml.gz" in caplog.text
+    assert sorted(os.listdir(out)) == ["good.xml.parquet"]
+    assert sorted(os.listdir(src)) == ["bad.xml.gz"]
+    assert _row_json(spark.read.parquet(written[0])) == GOLDEN_FULL
+
+
+AWKWARD_NAMES = ["a b.xml", "50%41.xml", "k=v.xml", "no#frag.xml", "x+y.xml", "café.xml"]
+
+
+def test_awkward_file_names(spark, tmp_path):
+    """Path characters that URIs and partition directories escape (space,
+    ``%``, ``=``, ``#``, ``+``, non-ASCII) still map each input to its
+    reference-named output and its own file name."""
+    src = tmp_path / "in"
+    out = tmp_path / "out"
+    src.mkdir()
+    out.mkdir()
+    for name in AWKWARD_NAMES:
+        shutil.copy(REF_XML, src / name)
+    written = convert(spark, str(src / "*.xml"), REF_XSD, target_path=str(out))
+    assert sorted(written) == sorted(str(out / f"{n[:-4]}.xml.parquet") for n in AWKWARD_NAMES)
+    assert written.skipped == []
+    for path in written:
+        assert _row_json(spark.read.parquet(path)) == GOLDEN_FULL
+    df = read_xml_documents(spark, str(src / "*.xml"), REF_XSD, file_info=True, source_col=True)
+    rows = df.select("file_info.filename", "_src").collect()
+    assert sorted(r[0] for r in rows) == sorted(r[1] for r in rows) == sorted(AWKWARD_NAMES)
+
+
+def test_read_builds_without_listing_job(spark, tmp_path):
+    """Above 32 paths Spark lists files with a distributed job unless the
+    session keeps listing on the driver; a local session does."""
+    for i in range(40):
+        shutil.copy(REF_XML, tmp_path / f"{i}.xml")
+    paths = sorted(str(p) for p in tmp_path.glob("*.xml"))
+    assert _jobs(spark, lambda: read_xml_documents(spark, paths, REF_XSD)) == 0
+
+
+def test_convert_job_count_does_not_grow_with_inputs(spark, tmp_path):
+    """``convert`` costs a fixed number of Spark jobs per call, not per file."""
+    jobs = {}
+    for n in (2, 10):
+        src = tmp_path / f"in{n}"
+        out = tmp_path / f"out{n}"
+        src.mkdir()
+        out.mkdir()
+        for i in range(n):
+            shutil.copy(REF_XML, src / f"{i}.xml")
+        written = []
+        jobs[n] = _jobs(
+            spark, lambda: written.extend(convert(spark, str(src / "*.xml"), REF_XSD, str(out)))
+        )
+        assert len(written) == n
+    assert jobs[10] == jobs[2]
+
+
+def test_cli_reports_converted_and_skipped(spark, tmp_path, caplog):
+    from xml_to_parquet_spark.cli import main
+
+    shutil.copy(REF_XML, tmp_path / "good.xml")
+    (tmp_path / "bad.xml").write_text("<purchaseOrder><unclosed>")
+    out = tmp_path / "out"
+    out.mkdir()
+    with caplog.at_level(logging.INFO):
+        rc = main(["-x", REF_XSD, "-t", str(out), str(tmp_path / "good.xml"), str(tmp_path / "bad.xml")])
+    assert rc == 0
+    assert "converted 1, skipped 1" in caplog.text
+
+
+def test_convert_mixed_kinds_in_one_call(spark, tmp_path):
+    """Plain, tar.gz and zip inputs of one call each get their reference
+    names; a member that cannot be named (it sits in a sub-directory of the
+    archive) is logged without losing its siblings, and its archive is
+    reported as skipped and kept by ``delete_xml``."""
+    src = tmp_path / "in"
+    out = tmp_path / "out"
+    src.mkdir()
+    out.mkdir()
+    shutil.copy(REF_XML, src / "plain.xml")
+    with tarfile.open(src / "t.tar.gz", "w:gz") as tf:
+        tf.add(REF_XML, "x.xml")
+        tf.add(REF_XML, "sub/y.xml")
+    with zipfile.ZipFile(src / "z.zip", "w") as zf:
+        zf.write(REF_XML, "m 1.xml")
+    written = convert(spark, str(src / "*"), REF_XSD, target_path=str(out), delete_xml=True)
+    assert sorted(os.path.basename(w) for w in written) == [
+        "plain.xml.parquet", "t.x.xml.parquet", "z.m 1.xml.parquet"
+    ]
+    assert written.skipped == [str(src / "t.tar.gz")]
+    assert os.listdir(src) == ["t.tar.gz"]
+    for path in written:
+        assert _row_json(spark.read.parquet(path)) == GOLDEN_FULL
+
+
+def test_corrupt_tar_is_isolated(spark, tmp_path, caplog):
+    """A truncated tar.gz beside a good one in one call: the good archive's
+    members are written and the bad archive is logged and skipped."""
+    src = tmp_path / "in"
+    out = tmp_path / "out"
+    src.mkdir()
+    out.mkdir()
+    for name in ("good", "bad"):
+        with tarfile.open(src / f"{name}.tar.gz", "w:gz") as tf:
+            for i in range(3):
+                tf.add(REF_XML, f"m{i}.xml")
+    data = (src / "bad.tar.gz").read_bytes()
+    (src / "bad.tar.gz").write_bytes(data[: len(data) // 2])
+    with caplog.at_level(logging.INFO):
+        written = convert(spark, str(src / "*"), REF_XSD, target_path=str(out))
+    assert sorted(os.path.basename(w) for w in written) == [
+        f"good.m{i}.xml.parquet" for i in range(3)
+    ]
+    assert written.skipped == [str(src / "bad.tar.gz")]
+    assert "bad.tar.gz" in caplog.text
+    for path in written:
+        assert _row_json(spark.read.parquet(path)) == GOLDEN_FULL

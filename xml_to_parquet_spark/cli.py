@@ -170,7 +170,7 @@ def main(argv: list[str] | None = None) -> int:
         file_info=args.file_info,
         delete_xml=args.delete_xml,
     )
-    log.info("wrote %d parquet files", len(written))
+    log.info("converted %d, skipped %d", len(written), len(written.skipped))
     return 0 if written or not args.input_files else 1
 
 

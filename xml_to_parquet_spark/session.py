@@ -37,10 +37,15 @@ def get_spark(app_name: str = "xml_to_parquet_spark", master: str | None = None)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    if not master and not os.environ.get("SPARK_MASTER"):
+        master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
+    if master and master.startswith("local"):
+        # listing tasks would run in this JVM anyway (120 files: 120 tasks, build 0.82 -> 0.37 s)
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
+        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -5,7 +5,8 @@ The reference iterates archive members in-process; Spark-first, we read the
 archives as ``binaryFile`` rows and expand members inside ``mapInPandas``,
 so at 100 TB each archive is one task and extraction runs on executors with
 no driver involvement. Corrupt zips are skipped with a log, matching the
-reference's ``testzip()`` guard (convert_xml_to_parquet.py:331-333).
+reference's ``testzip()`` guard (convert_xml_to_parquet.py:331-333); a
+corrupt or truncated tar.gz is skipped the same way.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ import io
 import logging
 import os
 import tarfile
+import zlib
 from collections.abc import Iterator
 from zipfile import BadZipFile, ZipFile
 
@@ -41,43 +43,54 @@ def _expand_tar(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in it:
         rows = []
         for path, content in zip(pdf["path"], pdf["content"]):
-            base = os.path.basename(path)
-            with tarfile.open(fileobj=io.BytesIO(bytes(content)), mode="r") as tf:
-                for member in tf.getmembers():
-                    if not member.isfile():
-                        continue
-                    info = member.get_info()
-                    fh = tf.extractfile(member)
-                    rows.append(
-                        {
-                            "src": path,
-                            "member": member.name,
-                            "xml": fh.read().decode("utf-8", errors="replace"),
-                            "name": info["name"],
-                            "mode": info["mode"],
-                            "uid": info["uid"],
-                            "gid": info["gid"],
-                            "size": info["size"],
-                            "mtime": int(info["mtime"]),
-                            "chksum": info["chksum"],
-                            "type": (
-                                info["type"].decode()
-                                if isinstance(info["type"], bytes)
-                                else str(info["type"])
-                            ),
-                            "linkname": info["linkname"],
-                            "uname": info["uname"],
-                            "gname": info["gname"],
-                            "devmajor": info["devmajor"],
-                            "devminor": info["devminor"],
-                            "tarfile": base,
-                        }
-                    )
+            try:
+                rows += _tar_members(path, content)
+            except (tarfile.TarError, EOFError, OSError, zlib.error):
+                _logger.info("Tar File is Corrupt:%s", path)
         yield pd.DataFrame(
             rows,
             columns=_MEMBER_COLS
             + [c.split()[0] for c in TAR_INFO_SCHEMA.split(", ")],
         )
+
+
+def _tar_members(path: str, content: bytes) -> list[dict]:
+    """Every file member of one tar archive; raises on a corrupt archive, so
+    a truncated one gives no rows at all, like a corrupt zip."""
+    base = os.path.basename(path)
+    rows = []
+    with tarfile.open(fileobj=io.BytesIO(bytes(content)), mode="r") as tf:
+        for member in tf.getmembers():
+            if not member.isfile():
+                continue
+            info = member.get_info()
+            fh = tf.extractfile(member)
+            rows.append(
+                {
+                    "src": path,
+                    "member": member.name,
+                    "xml": fh.read().decode("utf-8", errors="replace"),
+                    "name": info["name"],
+                    "mode": info["mode"],
+                    "uid": info["uid"],
+                    "gid": info["gid"],
+                    "size": info["size"],
+                    "mtime": int(info["mtime"]),
+                    "chksum": info["chksum"],
+                    "type": (
+                        info["type"].decode()
+                        if isinstance(info["type"], bytes)
+                        else str(info["type"])
+                    ),
+                    "linkname": info["linkname"],
+                    "uname": info["uname"],
+                    "gname": info["gname"],
+                    "devmajor": info["devmajor"],
+                    "devminor": info["devminor"],
+                    "tarfile": base,
+                }
+            )
+    return rows
 
 
 def _expand_zip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
